@@ -9,8 +9,10 @@ live business systems. This package expresses that surface Spark-first:
   batched writes). Config-activated; no database exists in this environment,
   so they are constructed-and-documented but not integration-tested here.
 * ``rest``   — executor-side batched REST sink via ``foreachPartition`` with
-  an injectable transport; a local-file transport fake stands in for the
-  remote API so batching/retry plumbing is fully tested offline.
+  an injectable transport. ``LocalFileTransport`` stands in for the remote
+  API (one atomically written file per batch, keyed by run, partition,
+  attempt and batch) and ``read_sink_output`` reads one run back with task
+  retries deduplicated, so batching, retry and restart are tested offline.
 """
 
 from ai_to_cvent_etl_spark.connectors.files import (  # noqa: F401

@@ -6,25 +6,28 @@ tasks — the driver never materializes the data, so throughput scales with
 executor count and the API's rate limit, not driver memory.
 
 The transport is injectable. Production wires an HTTP client with retry/
-backoff; this environment has no network, so ``LocalFileTransport`` (append
-batches to local JSON-lines files) stands in and the batching logic is fully
-tested offline.
+backoff; this environment has no network, so ``LocalFileTransport`` (one
+atomically written JSON file per batch) stands in, and ``read_sink_output``
+reads a run back, so the batching, retry and restart logic is fully tested
+offline.
 
 Scale notes:
   * batch_size bounds per-request payload; one partition = one connection —
     repartition upstream to match the API's concurrency budget.
   * Transports receive an explicit flush per partition end, so partial
     batches are never lost.
-  * Idempotency: batches carry (partition_id, batch_index, attempt_number)
-    so a retried task (Spark re-runs failed tasks) can be deduplicated
-    server-side; the local file fake additionally keys its files by attempt
-    so retries never double-count even without a server.
+  * Idempotency: every batch carries the key (run_id, partition_id,
+    attempt_number, batch_index). A retried Spark task re-sends its
+    partition under a higher attempt and the reader keeps only the highest;
+    a rerun of a killed load with the same run_id replaces the same files.
+    Server-side the key maps to PUT-with-idempotency-key semantics.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import uuid
 from typing import Callable
 
@@ -32,91 +35,17 @@ from pyspark.sql import DataFrame
 
 
 class LocalFileTransport:
-    """Network-free transport fake: appends each batch as one JSON line to a
-    per-partition file under ``out_dir``. Deterministic and inspectable."""
+    """Network-free, restart-idempotent transport fake: every batch is its own
+    JSON file under ``out_dir``, named by the idempotency key
+    ``(run_id, partition, attempt, batch)`` and written atomically (temp file,
+    then ``os.replace``).
 
-    def __init__(self, out_dir: str):
-        self.out_dir = out_dir
+    A rerun of the same load with the same ``run_id`` recomputes the same
+    deterministic batches and replaces identical paths, so the sink state
+    after "kill anywhere, rerun" equals the clean one-shot state. Server-side
+    this maps to PUT-with-idempotency-key semantics."""
 
-    def send(
-        self,
-        partition_id: int,
-        batch_index: int,
-        records: list[dict],
-        attempt_number: int = 0,
-    ) -> None:
-        # attempt_number in the file name keeps a retried Spark task's
-        # re-appended batches distinguishable from the original attempt's, so
-        # the local fake stays loss- AND duplicate-free: a reader keeps, per
-        # partition, only the highest attempt present (ADVICE r1).
-        os.makedirs(self.out_dir, exist_ok=True)
-        path = os.path.join(
-            self.out_dir,
-            f"partition_{partition_id:05d}_a{attempt_number:02d}.jsonl",
-        )
-        with open(path, "a", encoding="utf-8") as f:
-            f.write(
-                json.dumps(
-                    {
-                        "partition_id": partition_id,
-                        "batch_index": batch_index,
-                        "attempt_number": attempt_number,
-                        "n_records": len(records),
-                        "records": records,
-                    },
-                    sort_keys=True,
-                    default=str,
-                )
-                + "\n"
-            )
-
-
-def read_sink_output(out_dir: str) -> list[dict]:
-    """Read a ``LocalFileTransport`` output dir, deduplicating task retries.
-
-    Files are named ``partition_{pid}_a{attempt}.jsonl``; a retried Spark
-    task re-sends its whole partition under a higher attempt number, so the
-    ONLY correct read keeps, per partition, the highest attempt present and
-    ignores the rest. Every consumer of the sink output must go through this
-    helper (ADVICE r2: a naive ``partition_*.jsonl`` glob double-counts
-    retried partitions). Returns the batch dicts ordered by (partition_id,
-    batch_index).
-    """
-    import glob
-    import re
-
-    best: dict[int, tuple[int, str]] = {}  # pid -> (attempt, path)
-    pat = re.compile(r"partition_(\d+)_a(\d+)\.jsonl$")
-    for path in glob.glob(os.path.join(out_dir, "partition_*.jsonl")):
-        m = pat.search(path)
-        if not m:
-            continue
-        pid, attempt = int(m.group(1)), int(m.group(2))
-        if pid not in best or attempt > best[pid][0]:
-            best[pid] = (attempt, path)
-    batches: list[dict] = []
-    for _pid, (_attempt, path) in sorted(best.items()):
-        with open(path, encoding="utf-8") as f:
-            batches.extend(json.loads(line) for line in f)
-    batches.sort(key=lambda b: (b["partition_id"], b["batch_index"]))
-    return batches
-
-
-class IdempotentFileTransport:
-    """Restart-idempotent transport: every batch is its own file, named by
-    the RUN-SCOPED idempotency key ``(run_id, partition, attempt, batch)``
-    and written atomically (temp + rename).
-
-    ``LocalFileTransport`` is loss/duplicate-free across Spark TASK retries
-    (attempt in the name) but appends — a killed DRIVER process that reruns
-    the same load would append the same batches again. This transport is the
-    production restart story: a rerun with the same ``run_id`` recomputes
-    the same deterministic batches and renames over identical paths, so the
-    sink state after \"kill anywhere, rerun\" equals the clean one-shot
-    state. Server-side this maps to PUT-with-idempotency-key semantics.
-    """
-
-    def __init__(self, out_dir: str, run_id: str):
+    def __init__(self, out_dir: str, run_id: str = "0"):
         self.out_dir = out_dir
         self.run_id = run_id
 
@@ -152,32 +81,29 @@ class IdempotentFileTransport:
         os.replace(tmp, path)  # atomic: a kill mid-write leaves only .tmp
 
 
-def read_idempotent_output(out_dir: str, run_id: str) -> list[dict]:
-    """Read an ``IdempotentFileTransport`` dir for one run: keep, per
-    partition, only the highest attempt present (task-retry dedup), ignore
-    orphaned ``.tmp`` files (kill-mid-write debris), order by
-    (partition_id, batch_index)."""
-    import glob
-    import re
+def read_sink_output(out_dir: str, run_id: str = "0") -> list[dict]:
+    """Read one run's ``LocalFileTransport`` output, deduplicating task
+    retries.
 
-    pat = re.compile(rf"run_{re.escape(run_id)}_p(\d+)_a(\d+)_b(\d+)\.jsonl$")
+    A retried Spark task re-sends its whole partition under a higher attempt
+    number, so the only correct read keeps, per partition, the highest
+    attempt present and ignores the rest; orphaned ``.tmp`` files
+    (kill-mid-write debris) are ignored too. Every consumer of the sink
+    output must go through this helper: a naive glob double-counts retried
+    partitions. Returns the batch dicts ordered by (partition_id,
+    batch_index).
+    """
+    pat = re.compile(rf"run_{re.escape(run_id)}_p(\d+)_a(\d+)_b\d+\.jsonl")
+    names = os.listdir(out_dir) if os.path.isdir(out_dir) else []
+    found = [(int(m[1]), int(m[2]), m[0]) for m in map(pat.fullmatch, names) if m]
     best_attempt: dict[int, int] = {}
-    files: list[tuple[int, int, int, str]] = []
-    for path in glob.glob(
-        os.path.join(out_dir, f"run_{run_id}_p*_a*_b*.jsonl")
-    ):
-        m = pat.search(path)
-        if not m:
-            continue
-        pid, att, bidx = (int(g) for g in m.groups())
-        files.append((pid, att, bidx, path))
+    for pid, att, _name in found:
         best_attempt[pid] = max(best_attempt.get(pid, -1), att)
     batches = []
-    for pid, att, bidx, path in sorted(files):
-        if att != best_attempt[pid]:
-            continue
-        with open(path, encoding="utf-8") as f:
-            batches.extend(json.loads(line) for line in f)
+    for pid, att, name in found:
+        if att == best_attempt[pid]:
+            with open(os.path.join(out_dir, name), encoding="utf-8") as f:
+                batches.append(json.load(f))
     batches.sort(key=lambda b: (b["partition_id"], b["batch_index"]))
     return batches
 
@@ -199,53 +125,21 @@ class RestBatchSink:
         columns = df.columns
 
         def _send_partition(it):
-            import inspect
-
             from pyspark import TaskContext
 
             ctx = TaskContext.get()
             pid = ctx.partitionId()
             attempt = ctx.attemptNumber()
             transport = factory()
-            # Pass attempt_number when the transport supports it (keeps the
-            # injectable-transport contract backward compatible).
-            takes_attempt = "attempt_number" in inspect.signature(
-                transport.send
-            ).parameters
-            kw = {"attempt_number": attempt} if takes_attempt else {}
             buf: list[dict] = []
             batch_index = 0
             for row in it:
                 buf.append(dict(zip(columns, row)))
                 if len(buf) >= batch_size:
-                    transport.send(pid, batch_index, buf, **kw)
+                    transport.send(pid, batch_index, buf, attempt_number=attempt)
                     batch_index += 1
                     buf = []
             if buf:  # explicit final flush — partial batches are never lost
-                transport.send(pid, batch_index, buf, **kw)
+                transport.send(pid, batch_index, buf, attempt_number=attempt)
 
         df.foreachPartition(_send_partition)
-
-
-def run_events_to_rest_pipeline(
-    spark, sf_dir: str, out_dir: str | None = None, batch_size: int = 100
-) -> str:
-    """End-to-end ETL demo: extract events, normalize, load via REST sink.
-    Returns the transport output dir for inspection."""
-    from pyspark.sql import functions as F
-
-    from ai_to_cvent_etl_spark.io import load_table
-
-    out = out_dir or os.path.join("/tmp", f"rest_sink_{uuid.uuid4().hex[:8]}")
-    events = load_table(spark, sf_dir, "events")
-    normalized = events.select(
-        "event_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
-        "user_id",
-        F.upper("event_type").alias("event_type"),
-        F.round(F.col("value"), 2).alias("value"),
-    )
-    RestBatchSink(lambda: LocalFileTransport(out), batch_size=batch_size).write(
-        normalized
-    )
-    return out

@@ -47,46 +47,55 @@ _ROUNDS = 3
 # reliable (HDFS/S3) checkpoint dir, or `df.persist(DISK_AND_MEMORY)` +
 # a materializing count, both of which keep lineage or durable copies.
 # local[32] has a single immortal executor, so the fast path is safe here.
-# Eviction: entries for other (app, dataset) keys are dropped on insert so
-# checkpointed blocks for retired SparkSessions / other SF dirs don't stay
-# pinned in executor storage for the process lifetime.
 _TRADE_EDGE_CACHE: dict = {}
-# Up to 3 entries per (app, sf_dir) since r7 — string edges, int edges and
-# the nodes dim — and suites/stress runs touch up to 4 SF dirs per app, so
-# a cap of 4 would thrash (evict + recompute checkpointed edge lists on
-# every alternation between two dirs; ADVICE r7). 12 = 3 entries x 4 dirs.
+# Two entries per (app, sf_dir) — string edges and int edges — and
+# suites/stress runs touch up to 4 SF dirs per app, so a small cap would
+# thrash (evict + recompute checkpointed edge lists on every alternation
+# between two dirs; ADVICE r7). 12 covers 6 dirs.
 _TRADE_EDGE_CACHE_MAX = 12
+
+
+def _memo(cache: dict, key: tuple, build, max_entries: int = 0) -> DataFrame:
+    """``cache[key]``, built by ``build()`` on a miss. ``key[0]`` is the
+    Spark application id: on insert, entries of other apps are evicted so
+    checkpointed blocks of retired SparkSessions don't stay pinned in
+    executor storage for the process lifetime; with ``max_entries`` the
+    oldest entries are evicted down to the cap."""
+    hit = cache.get(key)
+    if hit is not None:
+        return hit
+    df = build()
+    for k in [k for k in cache if k[0] != key[0]]:
+        del cache[k]
+    while max_entries and len(cache) >= max_entries:
+        del cache[next(iter(cache))]
+    cache[key] = df
+    return df
 
 
 def trade_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Undirected (src, dst) string-node edges of the customer-supplier
     trade graph, localCheckpoint-truncated and memoized per app+dataset."""
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _TRADE_EDGE_CACHE.get(cache_key)
-    if cached is not None:
-        return cached
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    e = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("a"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("b"),
+
+    def build() -> DataFrame:
+        orders = load_table(spark, sf_dir, "orders")
+        li = load_table(spark, sf_dir, "lineitem")
+        e = (
+            orders.join(li, orders.o_orderkey == li.l_orderkey)
+            .select(
+                F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("a"),
+                F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("b"),
+            )
+            .distinct()
         )
-        .distinct()
-    )
-    und = (
-        e.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .unionByName(e.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-        .localCheckpoint(eager=False)
-    )
-    stale = [k for k in _TRADE_EDGE_CACHE if k[0] != cache_key[0]]
-    for k in stale:  # evict entries from dead/previous Spark apps first
-        del _TRADE_EDGE_CACHE[k]
-    while len(_TRADE_EDGE_CACHE) >= _TRADE_EDGE_CACHE_MAX:
-        del _TRADE_EDGE_CACHE[next(iter(_TRADE_EDGE_CACHE))]
-    _TRADE_EDGE_CACHE[cache_key] = und
-    return und
+        return (
+            e.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+            .unionByName(e.select(F.col("b").alias("src"), F.col("a").alias("dst")))
+            .localCheckpoint(eager=False)
+        )
+
+    key = (spark.sparkContext.applicationId, sf_dir)
+    return _memo(_TRADE_EDGE_CACHE, key, build, _TRADE_EDGE_CACHE_MAX)
 
 
 # --- r7: BIGINT node ids for the iterative keys -------------------------
@@ -141,8 +150,8 @@ def _lex11_decode_expr(code_sql: str) -> str:
     """SQL expression: exact inverse of _lex11_expr — BIGINT code back to
     the contract's 'c{key}'/'s{key}' string, row-locally.
 
-    Why this exists (r8): the first r7 shape decoded through a
-    trade_graph_nodes dimension join, which re-derived _trade_pairs — a
+    Why this exists (r8): the first r7 shape decoded through an (id, node)
+    dimension join, which re-derived _trade_pairs — a
     SECOND full orders⋈lineitem join+distinct per query (measured ~14 s of
     a 21 s sf1 pagerank under the full-cost protocol). The encoding is
     injective pure-integer arithmetic, so the inverse is too: digit count
@@ -190,62 +199,20 @@ def trade_graph_edges_int(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of strings.  localCheckpoint (MEMORY_AND_DISK) + memoized per
     app+dataset, like the string variant.
     """
-    cache_key = (spark.sparkContext.applicationId, sf_dir, "int")
-    cached = _TRADE_EDGE_CACHE.get(cache_key)
-    if cached is not None:
-        return cached
-    e = _trade_pairs(spark, sf_dir).select(
-        F.expr(_lex11_expr("o_custkey", False)).alias("a"),
-        F.expr(_lex11_expr("l_suppkey", True)).alias("b"),
-    )
-    und = (
-        e.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .unionByName(e.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-        .localCheckpoint(eager=False)
-    )
-    stale = [k for k in _TRADE_EDGE_CACHE if k[0] != cache_key[0]]
-    for k in stale:
-        del _TRADE_EDGE_CACHE[k]
-    while len(_TRADE_EDGE_CACHE) >= _TRADE_EDGE_CACHE_MAX:
-        del _TRADE_EDGE_CACHE[next(iter(_TRADE_EDGE_CACHE))]
-    _TRADE_EDGE_CACHE[cache_key] = und
-    return und
 
+    def build() -> DataFrame:
+        e = _trade_pairs(spark, sf_dir).select(
+            F.expr(_lex11_expr("o_custkey", False)).alias("a"),
+            F.expr(_lex11_expr("l_suppkey", True)).alias("b"),
+        )
+        return (
+            e.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+            .unionByName(e.select(F.col("b").alias("src"), F.col("a").alias("dst")))
+            .localCheckpoint(eager=False)
+        )
 
-def trade_graph_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(id BIGINT, node STRING) dimension of the trade graph — the decode
-    table that maps lex11 ids back to the contract's 'c…'/'s…' strings at
-    output time (one |V|-row join after the iterations; |V| << |E|)."""
-    cache_key = (spark.sparkContext.applicationId, sf_dir, "nodes")
-    cached = _TRADE_EDGE_CACHE.get(cache_key)
-    if cached is not None:
-        return cached
-    pairs = _trade_pairs(spark, sf_dir)
-    nodes = (
-        pairs.select(
-            F.expr(_lex11_expr("o_custkey", False)).alias("id"),
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias(
-                "node"
-            ),
-        )
-        .unionByName(
-            pairs.select(
-                F.expr(_lex11_expr("l_suppkey", True)).alias("id"),
-                F.concat(
-                    F.lit("s"), F.col("l_suppkey").cast("string")
-                ).alias("node"),
-            )
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    stale = [k for k in _TRADE_EDGE_CACHE if k[0] != cache_key[0]]
-    for k in stale:
-        del _TRADE_EDGE_CACHE[k]
-    while len(_TRADE_EDGE_CACHE) >= _TRADE_EDGE_CACHE_MAX:
-        del _TRADE_EDGE_CACHE[next(iter(_TRADE_EDGE_CACHE))]
-    _TRADE_EDGE_CACHE[cache_key] = nodes
-    return nodes
+    key = (spark.sparkContext.applicationId, sf_dir, "int")
+    return _memo(_TRADE_EDGE_CACHE, key, build, _TRADE_EDGE_CACHE_MAX)
 
 _IT_DUCK = """
         c{i} AS (
@@ -446,7 +413,8 @@ _EDGE_CTES = f"""
 # time. Staleness contract (same as operators/kmeans.py _MODEL_CACHE): the
 # cache assumes the parquet under sf_dir is immutable for the process
 # lifetime — true for the read-only /root/testdata fixtures; call
-# _EDGE_CACHE.clear() if a dataset is ever rewritten in-process.
+# _EDGE_CACHE.clear() if a dataset is ever rewritten in-process. Entries of
+# retired Spark apps are evicted on insert (_memo).
 _EDGE_CACHE: dict = {}
 
 def _mutual_affinity_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -455,45 +423,44 @@ def _mutual_affinity_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     prediction), G5 (k-core) and G6 (BFS). Degree <= _TOP_PARTNERS by
     construction. The result is localCheckpoint-truncated and memoized
     per (Spark app, dataset) so the four graph queries build it once."""
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _EDGE_CACHE.get(cache_key)
-    if cached is not None:
-        return cached
-    li = load_table(spark, sf_dir, "lineitem")
-    ps = li.select("l_partkey", "l_suppkey").distinct()
-    a = ps.select(
-        F.col("l_partkey").alias("pk"), F.col("l_suppkey").alias("s1")
-    )
-    b = ps.select(
-        F.col("l_partkey").alias("pk"), F.col("l_suppkey").alias("s2")
-    )
-    pairs = (
-        a.join(b, (a.pk == b.pk) & (F.col("s1") < F.col("s2")))
-        .groupBy("s1", "s2")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    direct = pairs.select(
-        F.col("s1").alias("src"), F.col("s2").alias("dst"), "cnt"
-    ).unionByName(
-        pairs.select(F.col("s2").alias("src"), F.col("s1").alias("dst"), "cnt")
-    )
-    rn = F.row_number().over(
-        Window.partitionBy("src").orderBy(F.desc("cnt"), F.asc("dst"))
-    )
-    top5 = (
-        direct.withColumn("rn", rn)
-        .filter(F.col("rn") <= _TOP_PARTNERS)
-        .select("src", "dst")
-    )
-    rev = top5.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    edges = (
-        top5.intersect(rev)
-        .filter(F.col("src") < F.col("dst"))
-        .select(F.col("src").alias("lo"), F.col("dst").alias("hi"))
-        .localCheckpoint(eager=False)
-    )
-    _EDGE_CACHE[cache_key] = edges
-    return edges
+
+    def build() -> DataFrame:
+        li = load_table(spark, sf_dir, "lineitem")
+        ps = li.select("l_partkey", "l_suppkey").distinct()
+        a = ps.select(
+            F.col("l_partkey").alias("pk"), F.col("l_suppkey").alias("s1")
+        )
+        b = ps.select(
+            F.col("l_partkey").alias("pk"), F.col("l_suppkey").alias("s2")
+        )
+        pairs = (
+            a.join(b, (a.pk == b.pk) & (F.col("s1") < F.col("s2")))
+            .groupBy("s1", "s2")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+        )
+        direct = pairs.select(
+            F.col("s1").alias("src"), F.col("s2").alias("dst"), "cnt"
+        ).unionByName(
+            pairs.select(F.col("s2").alias("src"), F.col("s1").alias("dst"), "cnt")
+        )
+        rn = F.row_number().over(
+            Window.partitionBy("src").orderBy(F.desc("cnt"), F.asc("dst"))
+        )
+        top5 = (
+            direct.withColumn("rn", rn)
+            .filter(F.col("rn") <= _TOP_PARTNERS)
+            .select("src", "dst")
+        )
+        rev = top5.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        return (
+            top5.intersect(rev)
+            .filter(F.col("src") < F.col("dst"))
+            .select(F.col("src").alias("lo"), F.col("dst").alias("hi"))
+            .localCheckpoint(eager=False)
+        )
+
+    key = (spark.sparkContext.applicationId, sf_dir)
+    return _memo(_EDGE_CACHE, key, build)
 
 _LP_MIN_SCORE = 2
 

@@ -18,10 +18,12 @@ tests assert set-equality against the batch builders.
 
 from __future__ import annotations
 
+import os
+import shutil
 import tempfile
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DecimalType
 
@@ -181,6 +183,24 @@ def run_available_now(
     return sdf.sparkSession.table(name)
 
 
+def latest_per_key(
+    df: DataFrame,
+    key_cols: list[str] = ("user_id",),
+    order_cols: list[str] = ("ts", "event_id"),
+) -> DataFrame:
+    """Latest record per key (E2's compaction): keep the row ranked first by
+    ``order_cols`` descending, the unique id last, so ties break the same
+    way as q_etl_latest_by_key and its DuckDB oracle."""
+    w = Window.partitionBy(*key_cols).orderBy(
+        *[F.col(c).desc() for c in order_cols]
+    )
+    return (
+        df.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
+
+
 def foreach_batch_upsert(
     stream: DataFrame,
     target_dir: str,
@@ -190,8 +210,7 @@ def foreach_batch_upsert(
 ) -> None:
     """Micro-batch CDC upsert via foreachBatch: each batch is merged into a
     parquet target keeping the latest record per key (E2's compaction run
-    incrementally). The merge is deterministic — (order_cols) descending
-    with the unique id last, the same rule as q_etl_latest_by_key — so the
+    incrementally, ``latest_per_key``). The merge is deterministic, so the
     final target equals the batch compaction of the full input regardless
     of how the stream was chunked into micro-batches.
 
@@ -206,37 +225,26 @@ def foreach_batch_upsert(
     batch-id tracking) needs a transactional table format, not plain
     parquet — that is a deliberate scope boundary of this local fake.
     """
-    import os
-    import shutil
-    from pyspark.sql import Window
-
-    key_cols = list(key_cols)
-    order_cols = list(order_cols)
+    staging = f"{target_dir}__staging"
+    retired = f"{target_dir}__retired"
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        try:
-            current = spark.read.parquet(target_dir)
-        except Exception:
-            current = None
-        merged = (
-            current.unionByName(batch_df) if current is not None else batch_df
-        )
-        w = Window.partitionBy(*key_cols).orderBy(
-            *[F.col(c).desc() for c in order_cols]
-        )
-        compacted = (
-            merged.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        # A crash between the two renames below leaves the previous target
+        # only under __retired, and Spark replays the batch on restart: put
+        # the target back first, or the merge would treat it as empty.
+        if not os.path.isdir(target_dir) and os.path.isdir(retired):
+            os.rename(retired, target_dir)
+        merged = batch_df
+        if os.path.isdir(target_dir):
+            merged = batch_df.sparkSession.read.parquet(target_dir).unionByName(
+                batch_df
+            )
+        compacted = latest_per_key(merged, key_cols, order_cols)
         # Stage-then-swap: writing the merged result straight over
         # target_dir would make the rewrite's input depend on files being
         # deleted (cache() does not survive executor loss — a mid-write
         # recompute would read a half-deleted target). The staged copy is
         # fully durable before the old target is touched.
-        staging = f"{target_dir}__staging"
-        retired = f"{target_dir}__retired"
         compacted.write.mode("overwrite").parquet(staging)
         shutil.rmtree(retired, ignore_errors=True)
         if os.path.isdir(target_dir):

@@ -1,11 +1,14 @@
 """End-to-end ETL example: the reference system's daily job, Spark-first.
 
-Extract events from the source table, normalize and deduplicate, diff
-against the previous load, and push the changes to the target system through
-the batched REST sink — the complete extract-transform-load loop this engine
-replaces. Run:
+Extract events from the source table, normalize and keep the latest record
+per user, diff against the previous load, and push the changes to the target
+system through the batched REST sink — the complete extract-transform-load
+loop this engine replaces. Run:
 
-    python examples/etl_pipeline.py [sf_dir] [out_dir]
+    python examples/etl_pipeline.py [sf_dir] [out_dir] [run_id] [kill_after_batches]
+
+The job is restart-safe: killed anywhere and rerun with the same run_id, it
+ends in exactly the state of one clean run (see :func:`run`).
 
 Everything here is the public package API; swap LocalFileTransport for an
 HTTP transport and the parquet staging dir for the warehouse path and this
@@ -17,91 +20,26 @@ from __future__ import annotations
 import os
 import sys
 import tempfile
+import uuid
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
 
 
-def run(sf_dir: str, out_dir: str) -> dict:
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from ai_to_cvent_etl_spark.connectors import write_parquet
-    from ai_to_cvent_etl_spark.connectors.rest import (
-        LocalFileTransport,
-        RestBatchSink,
-    )
-    from ai_to_cvent_etl_spark.io import load_table
-    from ai_to_cvent_etl_spark.session import get_spark
-
-    spark = get_spark(app_name="etl-example")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # EXTRACT: source events
-    events = load_table(spark, sf_dir, "events")
-
-    # TRANSFORM: normalize + latest-record-per-key compaction (CDC upsert)
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    current = (
-        events.select(
-            "event_id",
-            "ts",
-            "user_id",
-            F.upper("event_type").alias("event_type"),
-            F.round("value", 2).alias("value"),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter("rn = 1")
-        .drop("rn")
-    )
-
-    # DIFF against the previous load (first run: empty previous -> all inserts)
-    staging = os.path.join(out_dir, "staging")
-    prev_path = os.path.join(staging, "current")
-    if os.path.exists(prev_path):
-        prev = spark.read.parquet(prev_path)
-        changes = current.join(prev.select("user_id", F.col("event_id").alias("prev_event_id")), "user_id", "left").filter(
-            F.col("prev_event_id").isNull() | (F.col("event_id") != F.col("prev_event_id"))
-        ).drop("prev_event_id")
-    else:
-        changes = current
-
-    # LOAD: batched REST push from the executors, THEN refresh the staging
-    # snapshot. `changes` reads the previous snapshot lazily, so every action
-    # on it must happen before the overwrite (in production: write the new
-    # snapshot to a versioned path and swap a pointer instead).
-    rest_out = os.path.join(out_dir, "rest")
-    n_pushed = changes.count()
-    RestBatchSink(lambda: LocalFileTransport(rest_out), batch_size=200).write(
-        changes.select("event_id", "user_id", "event_type", "value")
-    )
-    write_parquet(current, prev_path)
-
-    return {
-        "source_rows": events.count(),
-        "current_rows": current.count(),
-        "pushed_rows": n_pushed,
-        "rest_dir": rest_out,
-    }
-
-
-def run_resumable(
+def run(
     sf_dir: str,
     out_dir: str,
-    run_id: str,
+    run_id: str | None = None,
     kill_after_batches: int = 0,
 ) -> dict:
-    """The restart-safe variant of :func:`run` (VERDICT r5 task 8): the
-    REST push goes through ``IdempotentFileTransport`` keyed by ``run_id``,
-    and the staging snapshot is written to a VERSIONED path with an atomic
-    pointer swap as the final step. Killed anywhere and rerun with the same
-    run_id, the pipeline converges to the exact one-shot state:
+    """One load. The REST push is keyed by ``run_id`` (a fresh id when
+    None), and the staging snapshot is written to a versioned path with an
+    atomic ``CURRENT`` pointer swap as the final step. Killed anywhere and
+    rerun with the same run_id, the job converges to the one-shot state:
 
       * before the push finished: no pointer swap happened; the rerun
-        recomputes identical deterministic batches and renames over them;
+        recomputes identical deterministic batches and replaces them;
       * between push and swap: same — the swap is the commit point;
       * after the swap: the rerun sees the new snapshot and pushes an
         empty diff under a NEW run_id (the caller advances run_id only on
@@ -114,25 +52,26 @@ def run_resumable(
     driver exits nonzero with the sink in a genuinely partial state
     (earlier/parallel partitions may have landed).
     """
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from ai_to_cvent_etl_spark.connectors import write_parquet
     from ai_to_cvent_etl_spark.connectors.rest import (
-        IdempotentFileTransport,
+        LocalFileTransport,
         RestBatchSink,
     )
     from ai_to_cvent_etl_spark.io import load_table
     from ai_to_cvent_etl_spark.session import get_spark
+    from ai_to_cvent_etl_spark.streaming.jobs import latest_per_key
 
-    spark = get_spark(app_name="etl-resumable")
+    run_id = run_id or uuid.uuid4().hex[:12]
+    spark = get_spark(app_name="etl-example")
     spark.sparkContext.setLogLevel("ERROR")
 
+    # EXTRACT: source events
     events = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    current = (
+
+    # TRANSFORM: normalize + latest-record-per-key compaction (CDC upsert)
+    current = latest_per_key(
         events.select(
             "event_id",
             "ts",
@@ -140,19 +79,15 @@ def run_resumable(
             F.upper("event_type").alias("event_type"),
             F.round("value", 2).alias("value"),
         )
-        .withColumn("rn", F.row_number().over(w))
-        .filter("rn = 1")
-        .drop("rn")
     )
 
+    # DIFF against the committed snapshot (first load: all inserts)
     staging = os.path.join(out_dir, "staging")
     pointer = os.path.join(staging, "CURRENT")
-    prev_version = None
+    changes = current
     if os.path.exists(pointer):
         with open(pointer) as f:
-            prev_version = f.read().strip()
-    if prev_version:
-        prev = spark.read.parquet(os.path.join(staging, prev_version))
+            prev = spark.read.parquet(os.path.join(staging, f.read().strip()))
         changes = (
             current.join(
                 prev.select(
@@ -167,30 +102,24 @@ def run_resumable(
             )
             .drop("prev_event_id")
         )
-    else:
-        changes = current
 
+    # LOAD: batched REST push from the executors. Fixed partitioning and
+    # order make the batches identical across reruns.
     rest_out = os.path.join(out_dir, "rest")
-
     kill_pid = kill_after_batches - 1
 
-    class _Killing(IdempotentFileTransport):
+    class _Killing(LocalFileTransport):
         def send(self, partition_id, *a, **kw):
             if partition_id == kill_pid:
                 os._exit(137)  # hard crash before this partition lands
             super().send(partition_id, *a, **kw)
 
-    transport = (
-        (lambda: _Killing(rest_out, run_id))
-        if kill_after_batches
-        else (lambda: IdempotentFileTransport(rest_out, run_id))
-    )
-    # deterministic batch content across reruns: fix partitioning + order
+    transport = _Killing if kill_after_batches else LocalFileTransport
     ordered = changes.repartitionByRange(4, "user_id").sortWithinPartitions(
         "user_id"
     )
     n_pushed = ordered.count()
-    RestBatchSink(transport, batch_size=50).write(
+    RestBatchSink(lambda: transport(rest_out, run_id), batch_size=200).write(
         ordered.select("event_id", "user_id", "event_type", "value")
     )
 
@@ -200,28 +129,26 @@ def run_resumable(
     new_version = f"v_{run_id}"
     write_parquet(current, os.path.join(staging, new_version))
     tmp_ptr = pointer + ".tmp"
-    os.makedirs(staging, exist_ok=True)
     with open(tmp_ptr, "w") as f:
         f.write(new_version)
     os.replace(tmp_ptr, pointer)
 
     return {
+        "source_rows": events.count(),
+        "current_rows": current.count(),
         "pushed_rows": n_pushed,
         "rest_dir": rest_out,
+        "run_id": run_id,
         "version": new_version,
     }
 
 
 if __name__ == "__main__":
-    if len(sys.argv) > 1 and sys.argv[1] == "--resumable":
-        _, _, sf, out, rid, kill = sys.argv
-        print(run_resumable(sf, out, rid, kill_after_batches=int(kill)))
+    if len(sys.argv) > 2:
+        sf, out = sys.argv[1:3]
     else:
         sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-        out = (
-            sys.argv[2]
-            if len(sys.argv) > 2
-            else tempfile.mkdtemp(prefix="etl_example_")
-        )
-        stats = run(sf, out)
-        print(stats)
+        out = tempfile.mkdtemp(prefix="etl_example_")
+    rid = sys.argv[3] if len(sys.argv) > 3 else None
+    kill = int(sys.argv[4]) if len(sys.argv) > 4 else 0
+    print(run(sf, out, rid, kill_after_batches=kill))

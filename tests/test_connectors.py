@@ -68,14 +68,25 @@ def test_s6_partitioned_parquet_sink_prunes(spark, tmp_path):
 
 
 def test_s7_rest_sink_batches(spark, tmp_path):
+    from pyspark.sql import functions as F
+
     from ai_to_cvent_etl_spark.connectors.rest import (
         LocalFileTransport,
+        RestBatchSink,
         read_sink_output,
-        run_events_to_rest_pipeline,
     )
+    from ai_to_cvent_etl_spark.io import load_table
 
     out = str(tmp_path / "rest_out")
-    run_events_to_rest_pipeline(spark, SF0001, out_dir=out, batch_size=64)
+    events = load_table(spark, SF0001, "events")
+    normalized = events.select(
+        "event_id",
+        F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
+        "user_id",
+        F.upper("event_type").alias("event_type"),
+        F.round(F.col("value"), 2).alias("value"),
+    )
+    RestBatchSink(lambda: LocalFileTransport(out), batch_size=64).write(normalized)
 
     batches = read_sink_output(out)
     # simulate a task retry: partition 0 re-sends everything under attempt 1;
@@ -92,9 +103,7 @@ def test_s7_rest_sink_batches(spark, tmp_path):
         b["attempt_number"] == 1 for b in reread if b["partition_id"] == 0
     )
 
-    from ai_to_cvent_etl_spark.io import load_table
-
-    n_events = load_table(spark, SF0001, "events").count()
+    n_events = events.count()
     assert sum(b["n_records"] for b in batches) == n_events
     assert all(b["n_records"] <= 64 for b in batches)
     # batch indices are contiguous per partition (flush logic is ordered)

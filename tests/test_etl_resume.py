@@ -4,7 +4,7 @@ Composes the reference job shape — extract events → normalize →
 latest-per-key compaction → incremental diff vs previous load → batched
 REST push → atomic snapshot commit — and proves IDEMPOTENT RESUME: the
 pipeline process is HARD-KILLED mid-push (os._exit inside the transport,
-fault injected via the example's --resumable CLI), rerun with the same
+fault injected through the example's CLI), rerun with the same
 run_id, and the final sink + staging state must equal (a) a clean one-shot
 run and (b) the E2-style latest-per-key oracle compaction computed by
 DuckDB on the same parquet.
@@ -30,8 +30,7 @@ SCRIPT = os.path.join(REPO, "examples", "etl_pipeline.py")
 
 def _run(out_dir: str, run_id: str, kill_after: int) -> int:
     proc = subprocess.run(
-        [sys.executable, SCRIPT, "--resumable", SF, out_dir, run_id,
-         str(kill_after)],
+        [sys.executable, SCRIPT, SF, out_dir, run_id, str(kill_after)],
         capture_output=True,
         text=True,
         timeout=420,
@@ -41,10 +40,10 @@ def _run(out_dir: str, run_id: str, kill_after: int) -> int:
 
 def _sink_records(out_dir: str, run_id: str) -> list[tuple]:
     sys.path.insert(0, REPO)
-    from ai_to_cvent_etl_spark.connectors.rest import read_idempotent_output
+    from ai_to_cvent_etl_spark.connectors.rest import read_sink_output
 
     recs = []
-    for batch in read_idempotent_output(os.path.join(out_dir, "rest"), run_id):
+    for batch in read_sink_output(os.path.join(out_dir, "rest"), run_id):
         for r in batch["records"]:
             recs.append(
                 (r["event_id"], r["user_id"], r["event_type"], r["value"])

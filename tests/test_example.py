@@ -3,8 +3,6 @@ second run (same data) pushes nothing."""
 
 from __future__ import annotations
 
-import glob
-import json
 import os
 
 from tests.conftest import SF0001
@@ -14,6 +12,7 @@ def test_etl_pipeline_example_runs_and_is_incremental(spark, tmp_path):
     import sys
 
     sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__))))
+    from ai_to_cvent_etl_spark.connectors.rest import read_sink_output
     from examples.etl_pipeline import run
 
     out = str(tmp_path / "etl")
@@ -21,14 +20,13 @@ def test_etl_pipeline_example_runs_and_is_incremental(spark, tmp_path):
     assert first["current_rows"] > 0
     assert first["pushed_rows"] == first["current_rows"]  # first load: all inserts
 
-    pushed = 0
-    for p in glob.glob(os.path.join(first["rest_dir"], "partition_*.jsonl")):
-        with open(p, encoding="utf-8") as f:
-            pushed += sum(json.loads(line)["n_records"] for line in f)
+    batches = read_sink_output(first["rest_dir"], first["run_id"])
+    pushed = sum(b["n_records"] for b in batches)
     assert pushed == first["pushed_rows"]
 
     second = run(SF0001, out)
     assert second["pushed_rows"] == 0  # nothing changed -> nothing pushed
+    assert read_sink_output(second["rest_dir"], second["run_id"]) == []
 
 
 def test_curation_pipeline_example_runs_and_contracts(spark, tmp_path):

@@ -5,8 +5,8 @@ q_graph_label_prop's reduce is a lexicographic MIN over 'c{custkey}' /
 on lex11-encoded BIGINTs, so the whole rewrite is correct iff the encoding
 is order-preserving w.r.t. byte-wise string comparison. These tests pin
 that property (random + adversarial key sets, both prefixes) plus
-injectivity and the int64 bound, and the round-trip through the
-trade_graph_nodes decode dimension on a real fixture.
+injectivity and the int64 bound, and the row-local decode
+(_lex11_decode_expr) of the int edges on a real fixture.
 """
 
 from __future__ import annotations
@@ -17,10 +17,10 @@ from pyspark.sql import functions as F
 
 from ai_to_cvent_etl_spark.queries.graph import (
     _LEX11_S_OFFSET,
+    _lex11_decode_expr,
     _lex11_expr,
     trade_graph_edges,
     trade_graph_edges_int,
-    trade_graph_nodes,
 )
 from tests.conftest import SF0001
 
@@ -64,34 +64,30 @@ def test_lex11_injective_and_bounded(spark):
 
 
 def test_nodes_dim_decodes_int_edges(spark):
-    """Every int-edge endpoint decodes to exactly the string-edge node set."""
+    """Every int-edge endpoint decodes, through the row-local
+    _lex11_decode_expr that pagerank and label_prop use, to exactly the
+    string-edge node set, and the decode is one-to-one."""
     und_s = trade_graph_edges(spark, SF0001)
     und_i = trade_graph_edges_int(spark, SF0001)
-    nodes = trade_graph_nodes(spark, SF0001)
     str_nodes = {
         r.src for r in und_s.select("src").distinct().collect()
     }
-    decoded = {
+    decoded = [
         r.node
-        for r in und_i.select(F.col("src").alias("id"))
+        for r in und_i.select("src")
         .distinct()
-        .join(nodes, "id")
-        .select("node")
+        .select(F.expr(_lex11_decode_expr("src")).alias("node"))
         .collect()
-    }
-    assert decoded == str_nodes
-    # bijection: dim has one id per node and one node per id
-    n = nodes.count()
-    assert nodes.select("id").distinct().count() == n
-    assert nodes.select("node").distinct().count() == n
+    ]
+    assert set(decoded) == str_nodes
+    # bijection: one node per distinct id and one id per node
+    assert len(decoded) == len(set(decoded))
 
 
 def test_lex11_decode_expr_roundtrip(spark):
     """r8: the row-local inverse (_lex11_decode_expr) exactly recovers
     'c{key}'/'s{key}' for random + adversarial keys of every digit count —
     the property the decode-join-free pagerank/label_prop outputs rely on."""
-    from ai_to_cvent_etl_spark.queries.graph import _lex11_decode_expr
-
     rng = random.Random(13)
     keys = (
         rng.sample(range(1, 10**12), 300)

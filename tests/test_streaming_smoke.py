@@ -385,6 +385,71 @@ def test_foreach_batch_upsert_equals_batch_compaction(spark, replay, registry, t
     assert got_rows == want_rows
 
 
+def test_foreach_batch_upsert_replay_after_crash_between_renames(
+    spark, replay, registry, tmp_path
+):
+    """A crash between the upsert's two renames leaves the previous target
+    only under ``__retired`` (with or without a complete ``__staging``).
+    Spark replays the uncommitted batch on restart; the replay must restore
+    the previous target and end in the one-shot compaction, not in the
+    replayed batch alone."""
+    import glob
+    import shutil
+
+    from ai_to_cvent_etl_spark.streaming.jobs import (
+        foreach_batch_upsert,
+        read_events_stream,
+    )
+
+    parts = sorted(glob.glob(os.path.join(replay, "part-*.parquet")))
+    src = tmp_path / "src"
+    src.mkdir()
+    target = str(tmp_path / "target")
+    ckpt = str(tmp_path / "ckpt")
+
+    def upsert(ckpt_dir):
+        foreach_batch_upsert(
+            read_events_stream(spark, str(src)), target, ckpt_dir
+        )
+
+    # batches 0..n-2, then keep the target as it stood before the last batch
+    for p in parts[:-1]:
+        shutil.copy(p, src)
+    upsert(ckpt)
+    before_last = str(tmp_path / "before_last")
+    shutil.copytree(target, before_last)
+    shutil.copy(parts[-1], src)
+    upsert(ckpt)
+    last = len(parts) - 1
+    assert os.path.exists(os.path.join(ckpt, "commits", str(last)))
+
+    want = registry["q_etl_latest_by_key"].builder(spark, SF0001)
+    want_rows = sorted(map(tuple, want.collect()))
+    cols = ("user_id", "event_id", "ts", "event_type")
+    for with_staging in (True, False):
+        run_ckpt = str(tmp_path / f"ckpt_{with_staging}")
+        shutil.copytree(ckpt, run_ckpt)
+        # crash state: the last batch's offsets are logged but not committed,
+        # the old target sits under __retired, the merged one maybe staged
+        for f in (str(last), f".{last}.crc"):
+            if os.path.exists(os.path.join(run_ckpt, "commits", f)):
+                os.remove(os.path.join(run_ckpt, "commits", f))
+        shutil.rmtree(f"{target}__retired", ignore_errors=True)
+        shutil.copytree(before_last, f"{target}__retired")
+        if with_staging:
+            shutil.move(target, f"{target}__staging")
+        else:
+            shutil.rmtree(target)
+
+        upsert(run_ckpt)
+
+        got = spark.read.parquet(target).select(*cols)
+        assert sorted(map(tuple, got.collect())) == want_rows, with_staging
+        assert os.path.exists(os.path.join(run_ckpt, "commits", str(last)))
+        assert not os.path.exists(f"{target}__retired")
+        assert not os.path.exists(f"{target}__staging")
+
+
 def _has_protobuf() -> bool:
     try:
         from google.protobuf import descriptor  # noqa: F401
