@@ -141,36 +141,21 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-# (path, mtime_ns, size) -> unit. A suite touches events from dozens of
-# queries in one session; the footer never changes under a fixed file stat,
-# so the sniff runs once per distinct file, not once per query build.
-_TS_UNIT_CACHE: dict = {}
-
-
 def _events_ts_unit(path: str) -> str:
     """Sniff the parquet footer for events.ts time unit ('ns' or 'us').
 
     The driver has shipped both encodings across rounds (TIMESTAMP(NANOS)
     in r1-r2 test data, TIMESTAMP(MICROS) in r3), so the loader keys off the
-    footer instead of assuming one. The result is memoized per
-    (path, mtime, size) — rewriting the file invalidates the entry.
+    footer instead of assuming one. It runs only when load_table misses
+    _DF_MEMO, whose key holds the file's (mtime, size), so the sniff runs
+    once per distinct file per session.
     """
     import pyarrow.parquet as papq
 
     try:
-        st = os.stat(path)
-        key = (path, st.st_mtime_ns, st.st_size)
-    except OSError:
-        key = (path, None, None)
-    if key in _TS_UNIT_CACHE:
-        return _TS_UNIT_CACHE[key]
-    try:
-        field = papq.read_schema(path).field("ts")
-        unit = getattr(field.type, "unit", "us")
+        return getattr(papq.read_schema(path).field("ts").type, "unit", "us")
     except Exception:
-        unit = "us"
-    _TS_UNIT_CACHE[key] = unit
-    return unit
+        return "us"
 
 
 # (applicationId, sf_dir, name, (mtime_ns, size)) -> DataFrame.
@@ -307,13 +292,13 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
 def clear_df_caches() -> None:
     """Drop every memoized CHECKPOINTED DataFrame the engine holds
     (the graph edge caches). A measurement harness that unpersists all
-    persistent RDDs between queries (bench.py, tools/stress_merge.py)
-    MUST call this first: the memoized frames reference localCheckpoint
-    blocks, and reusing them after an external unpersist fails with
-    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (observed on the iterative graph
-    keys in the r6 sf10 sweep). Plain-Python memo caches (kmeans
-    centroid lists, parquet ts-unit sniffs) hold no RDD references and
-    are deliberately left alone."""
+    persistent RDDs between queries (perfbench's census,
+    tools/stress_merge.py) MUST call this first: the memoized frames
+    reference localCheckpoint blocks, and reusing them after an external
+    unpersist fails with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (observed on the
+    iterative graph keys in the r6 sf10 sweep). Plain-Python memo caches
+    (kmeans centroid lists) hold no RDD references and are deliberately
+    left alone."""
     from ai_to_cvent_etl_spark.queries import graph
 
     graph._TRADE_EDGE_CACHE.clear()

@@ -24,54 +24,11 @@ import traceback
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-
-# Loose Spark-dtype -> DuckDB-type compatibility map (mirrors
-# tests/harness.py _TYPE_COMPAT): the strict sf0.1 sweep flags int-vs-BIGINT
-# schema drift that a name-only compare accepts, so the committed artifact
-# must apply the same bar.
-_TYPE_COMPAT = {
-    "bigint": {"BIGINT"},
-    "int": {"INTEGER"},
-    "smallint": {"SMALLINT"},
-    "double": {"DOUBLE"},
-    "float": {"FLOAT"},
-    "string": {"VARCHAR"},
-    "timestamp": {"TIMESTAMP", "TIMESTAMP WITH TIME ZONE", "TIMESTAMP_NS",
-                  "TIMESTAMP_MS"},
-    "date": {"DATE"},
-    "boolean": {"BOOLEAN"},
-    "array<float>": {"FLOAT[]"},
-    "array<double>": {"DOUBLE[]"},
-    "array<string>": {"VARCHAR[]"},
-    "array<bigint>": {"BIGINT[]"},
-    "array<int>": {"INTEGER[]"},
-}
-
-
-def _types_compatible(spark_dtypes, duck_cols, duck_types) -> list[str]:
-    """Mismatch descriptions for Spark dtype vs DuckDB column type."""
-    problems = []
-    dmap = {c.lower(): str(t).upper() for c, t in zip(duck_cols, duck_types)}
-    for name, dtype in spark_dtypes:
-        want = None
-        for prefix, duck_ok in _TYPE_COMPAT.items():
-            if dtype.lower().startswith(prefix):
-                want = duck_ok
-                break
-        dt = dmap.get(name.lower(), "")
-        if (
-            want is not None
-            and dt
-            and dt not in want
-            and not dtype.lower().startswith("decimal")
-        ):
-            problems.append(f"{name}: spark={dtype} duck={dt}")
-    return problems
+from ai_to_cvent_etl_spark.io import TABLE_NAMES  # noqa: E402
+# the same loose Spark-vs-DuckDB type bar as the pytest parity gate: the
+# strict sf0.1 sweep flags int-vs-BIGINT schema drift that a name-only
+# compare accepts
+from tests.harness import type_problems  # noqa: E402
 
 
 # --- r7 (VERDICT r6 task 7): bounded-error verdicts for the three
@@ -177,7 +134,7 @@ def main() -> int:
         .getOrCreate()
     )
     con = duckdb.connect()
-    for t in TABLES:
+    for t in TABLE_NAMES:
         # driver fixtures are single files; repo-generated SFs (tools/
         # gen_sf.py) are Spark directory-parquet — glob the parts then
         path = os.path.join(args.sf_dir, f"{t}.parquet")
@@ -229,9 +186,7 @@ def main() -> int:
                     rec["spark_rows"] = n_spark
                     rec["oracle_rows"] = n_oracle
                     rec["rows_match"] = n_spark == n_oracle
-                    tp = _types_compatible(
-                        sdf.dtypes, orel0.columns, orel0.types
-                    )
+                    tp = type_problems(sdf.dtypes, orel0.columns, orel0.types)
                     rec["schema_match"] = (
                         sorted(scols) == sorted(orel0.columns) and not tp
                     )
@@ -278,12 +233,10 @@ def main() -> int:
                 orows = orel.fetchall()
                 rec["oracle_rows"] = len(orows)
                 rec["rows_match"] = len(srows) == len(orows)
-                type_problems = _types_compatible(sdf.dtypes, ocols, otypes)
-                rec["schema_match"] = (
-                    sorted(scols) == sorted(ocols) and not type_problems
-                )
-                if type_problems:
-                    rec["err"] = "type_mismatch: " + "; ".join(type_problems)
+                tp = type_problems(sdf.dtypes, ocols, otypes)
+                rec["schema_match"] = sorted(scols) == sorted(ocols) and not tp
+                if tp:
+                    rec["err"] = "type_mismatch: " + "; ".join(tp)
                 rec["hash_match"] = (
                     rec["rows_match"]
                     and rec["schema_match"]
@@ -297,10 +250,7 @@ def main() -> int:
         report[name] = rec
         status = "ok" if rec["hash_match"] else (rec["err"] or "MISMATCH")
         print(f"{name}: {str(status)[:60]}", file=sys.stderr)
-        # r7: write incrementally — a 2-hour sweep killed by a timeout
-        # used to lose EVERYTHING (report was only dumped at the end)
-        with open(args.out + ".partial", "w") as f:
-            json.dump(report, f, sort_keys=True)
+        _dump_partial()
 
     n_ok = sum(
         1 for r in report.values() if r["hash_match"] and not r["vacuous"]

@@ -38,6 +38,27 @@ _TYPE_COMPAT = {
 }
 
 
+def type_problems(spark_dtypes, duck_cols, duck_types) -> list[str]:
+    """Loose Spark-dtype vs DuckDB column-type check, one "name: spark=..
+    duck=.." description per incompatible column."""
+    problems = []
+    dmap = {c.lower(): str(t).upper() for c, t in zip(duck_cols, duck_types)}
+    for name, dtype in spark_dtypes:
+        want = next(
+            (ok for prefix, ok in _TYPE_COMPAT.items() if dtype.lower().startswith(prefix)),
+            None,
+        )
+        dt = dmap.get(name.lower(), "")
+        if want is not None and dt and dt not in want and not dtype.lower().startswith("decimal"):
+            problems.append(f"{name}: spark={dtype} duck={dt}")
+    return problems
+
+
+def executed_plan(df) -> str:
+    """The frame's executed physical plan as Spark prints it."""
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     for t in TABLE_NAMES:
@@ -93,17 +114,7 @@ def compare(spark_df, con: duckdb.DuckDBPyConnection, sql: str) -> list[str]:
     if len(spark_rows) != len(duck_rows):
         problems.append(f"row count differs: spark={len(spark_rows)} duck={len(duck_rows)}")
 
-    # type check (loose)
-    duck_types = dict(zip(duck_cols, duck_type_list))
-    for name, dtype in spark_df.dtypes:
-        want = None
-        for prefix, duck_ok in _TYPE_COMPAT.items():
-            if dtype.lower().startswith(prefix):
-                want = duck_ok
-                break
-        dt = str(duck_types.get(name.lower(), "")).upper()
-        if want is not None and dt and dt not in want and not dtype.lower().startswith("decimal"):
-            problems.append(f"type of {name}: spark={dtype} duck={dt}")
+    problems += [f"type of {p}" for p in type_problems(spark_df.dtypes, duck_cols, duck_type_list)]
 
     # order-insensitive value comparison, columns sorted by name
     order_s = [spark_cols.index(c) for c in sorted(spark_cols)]

@@ -27,8 +27,8 @@ must satisfy regardless of which wave added it:
       ingestion guards provide it for embeddings) — machine-proof that the
       exclusion is row-pruning-neutral across the registry.
 
-Per-key exemptions live in tests/test_plan_lint.py WITH one-line
-justifications; this module is policy-free parsing + rules.
+The per-key policy (R3 exemptions WITH one-line justifications, the R4
+grain check) and the Python-evaluation rule sit at the end of this module.
 """
 
 from __future__ import annotations
@@ -225,7 +225,7 @@ def lint_plan(plan: str) -> list[str]:
             # scale-safe when its input collapsed to a bounded grain first
             # (the W34/W38 sweep-line family: day-level relations). Report
             # the nearest bounding aggregate's grouping keys so the policy
-            # layer (tests/test_plan_lint.py) can assert they are calendar/
+            # layer (``lint_offences`` below) can assert they are calendar/
             # level grains — "bounded by construction", machine-checked.
             keys = _nearest_agg_keys(node)
             if keys is None:
@@ -237,3 +237,140 @@ def lint_plan(plan: str) -> list[str]:
     if n_exchanges > MAX_EXCHANGES:
         violations.append(f"R3:exchanges={n_exchanges}")
     return violations
+
+
+# --- Per-key policy ---------------------------------------------------------
+# R1, R2 and R5 are NEVER exempt: round 6 eliminated every CartesianProduct
+# and scan-scale single-partition exchange (broadcast bounded theta sides;
+# operators/ranking.py two-pass global rank / prefix-sum replacing
+# unpartitioned windows). R3 (shuffle budget > MAX_EXCHANGES) carries a
+# per-key justification table: iterative algorithms pay a bounded number of
+# exchanges per iteration over frames that COLLAPSE before iterating, and a
+# handful of multi-statistic reports run many exchanges over tiny
+# post-agg relations. Every entry says why the count is structural, not
+# accidental. tests/test_oracle_parity.py applies ``lint_offences`` to every
+# registered key's sf0.01 plan, on the frame its parity check builds.
+
+# key -> why its exchange count exceeds the budget BY DESIGN. Rough count
+# model given in parens (iters x exchanges-per-iter, or #tiny-frame stats).
+R3_EXEMPT = {
+    # --- bounded-iteration algorithms: k iterations x (1-3 keyed
+    #     aggregation exchanges over the collapsed node/edge frame) ---
+    "q_agg_bradley_terry": "MM fixed-point: 5 iterations x per-team agg",
+    "q_graph_pagerank": "power iteration: k rounds x (contrib agg + join)",
+    "q_graph_hits": "hub/authority double update per round",
+    "q_graph_ppr": "personalized push: k rounds over frontier",
+    "q_graph_label_prop": "label propagation rounds (localCheckpoint cuts lineage, exchanges remain)",
+    "q_graph_harmonic": "BFS frontier expansion per depth",
+    "q_graph_katz": "Katz series: k matvec rounds",
+    "q_graph_snowball_bias": "snowball waves: per-wave frontier join + dedup",
+    "q_vec_pca_power": "power iteration on the covariance: k matvecs",
+    "q_vec_pca_explained": "same power-iteration core + variance accounting",
+    "q_text_textrank": "PageRank over the word graph: k rounds",
+    "q_agg_hodges_lehmann": "binary-search on the pairwise-median count: log(range) probe rounds, each one aggregation",
+    # --- graph one-shots whose exchange count is the documented
+    #     edge->pair->triangle pipeline over the SPARSIFIED edge list ---
+    "q_graph_triangles": "edge orient + pair gen + closure join, each keyed",
+    "q_graph_temporal_triangles": "same pipeline + per-part top-k sparsify",
+    "q_graph_clustering_coeff": "triangle core + per-node degree joins",
+    "q_graph_edge_support": "truss support: pair gen + per-edge counts",
+    "q_graph_edge_jaccard": "neighbor-set join + per-edge union sizes",
+    "q_graph_percolation_profile": "threshold sweep: per-level component agg",
+    # --- multi-statistic reports: many exchanges, each over a tiny
+    #     post-aggregation relation (bands/cells/checkpoints), never the
+    #     corpus ---
+    "q_agg_basket_lift": "pair/item/total supports: 3 aggs + small joins",
+    "q_agg_borda_copeland": "per-month ranks then pairwise tallies over |nations| rows",
+    "q_agg_conformal_interval": "3 splits x (median/quantile/coverage) over disjoint slices",
+    "q_agg_bootstrap_median": "two-phase distributed median (histogram + "
+    "straddling-bucket refine) + r8's distributed prefix-sum point "
+    "estimate: every exchange is over a post-aggregation value/bucket/"
+    "replica-grain relation, never the raw corpus",
+    "q_agg_crps_empirical": "two prefix-sum passes (2 shuffles each) + obs walk",
+    "q_agg_gpd_pwm": "two global ranks (2 shuffles each) + moment agg",
+    "q_agg_gk_lambda": "per-row/col modes + grand mode: 4 tiny aggs",
+    "q_agg_local_moran_hotspots": "per-nation moments + neighbor join over 25 rows",
+    "q_agg_morans_i": "spatial weight join + 3 moment aggs over 25 nations",
+    "q_agg_mutual_information": "joint + 2 marginal + entropy aggs over cells",
+    "q_agg_naive_bayes": "per-class priors + per-(class,token) likelihoods + test join",
+    "q_agg_nemenyi_posthoc": "per-block ranks + pairwise table over 5x5 treatments",
+    "q_agg_quade": "block weights + within-block ranks + treatment stats",
+    "q_etl_fd_audit": "one distinct-pair agg per candidate FD (8 candidates)",
+    "q_etl_join_strategy_advisor": "cardinality probes of both sides per candidate key",
+    "q_etl_partition_evolution_plan": "per-month x per-layout-candidate size rollups",
+    "q_etl_pk_discovery": "one distinct-count agg per candidate key combo",
+    "q_sketch_histogram_quantile": "histogram build + cum walk + per-q probes (bounded bins)",
+    "q_sketch_theta_diff": "two sketch builds + set-op estimates (bounded sketch rows)",
+    "q_text_burrows_delta": "per-author z-scores over the bounded function-word vocab",
+    "q_text_tfidf_cosine": "tf + df + norm + pair-dot: each a keyed agg over terms",
+    "q_text_heaps_law": "6 checkpoint consumers of ONE checkpointed global rank (each a small agg)",
+    "q_vec_calinski_harabasz": "per-cluster + global moment aggs per k",
+    "q_vec_cluster_purity": "per-(cluster,label) cells + 2 marginals + argmax",
+    "q_win_renewal_curve": "per-cohort day spine x renewal aggs (bounded spine)",
+}
+
+
+# R4 (r8, VERDICT r7 item 5): an unpartitioned cumulative window is only
+# scale-safe when its input is a calendar/level-grain relation — bounded by
+# the calendar span or a fixed level set, NOT the row count. The lint
+# extracts the nearest bounding aggregate's grouping keys; this regex is
+# the machine-checked definition of "grain" for the ENFORCED family:
+# date/day/month grains and sweep-line levels. A data-scale key (user_id,
+# order key, doc_id, …) must NOT match.
+#
+# Scope (honest finding from the r8 registry-wide scan): 95 keys run SOME
+# unpartitioned window over a post-aggregation frame. Most are bounded by
+# construction but not by a NAME the regex can classify: `__gr_pid` is the
+# two-pass global-rank device (operators/ranking.py — one row per shuffle
+# partition, bounded by spark.sql.shuffle.partitions); `_groupingexpression`
+# is Catalyst's anonymous alias for inline grain exprs (date_trunc etc.);
+# the statistic/curve families (Lorenz/RFM/Pareto/KS/ranked values) window
+# value- or entity-grain frames whose safety argument is per-key (documented
+# in their docstrings, measured in STRESS_* where covered) rather than
+# name-derivable. R4 therefore GATES only the enumerated W34/W38 sweep-line
+# family below — the verdict's ask — and stays informational elsewhere;
+# lint_plan still reports every site so a scan can re-audit at any time.
+GRAIN_KEY_RE = re.compile(
+    r"^(d|dt|day|date|mon|month|week|wk|hour|hr|yr|year|level|lvl|grade|"
+    r"bucket|band|cell|grain)$|_(day|date|month|week|hour|year|level|"
+    r"grade|bucket|band)$|^(day|date|month|level|bucket)_|"
+    r"^(o_orderdate|l_shipdate)$"
+)
+
+# The sweep-line keys whose unpartitioned cumulative windows MUST consume
+# a calendar-grain aggregate (W34/W38 + the day-grain backlog variant).
+R4_ENFORCED = {
+    "q_win_queue_percentiles",
+    "q_win_littles_law",
+    "q_win_backlog",
+}
+
+
+def _r4_ok(violation: str) -> bool:
+    if violation == "R4:global-window-over-scan":
+        return False
+    keys = violation.split("=", 1)[1]
+    # keyless bound (limit/broadcast below) is bounded by construction
+    return all(GRAIN_KEY_RE.search(k) for k in keys.split(",") if k)
+
+
+def lint_offences(key: str, plan: str) -> list[str]:
+    """The plan's violations if ``key`` breaks the policy, else []."""
+    violations = lint_plan(plan)
+    hard = [v for v in violations if not v.startswith(("R3", "R4"))]
+    r3 = [v for v in violations if v.startswith("R3")]
+    r4 = [v for v in violations if v.startswith("R4")]
+    if (
+        hard
+        or (r3 and key not in R3_EXEMPT)
+        or (key in R4_ENFORCED and not all(_r4_ok(v) for v in r4))
+    ):
+        return violations
+    return []
+
+
+# Python evaluation nodes: only keys tagged ``python_boundary`` at
+# registration may plan one.
+PYTHON_EVAL_RE = re.compile(
+    r"BatchEvalPython|ArrowEvalPython|FlatMapGroupsInPandas|MapInPandas|PythonUDTF"
+)

@@ -5,12 +5,10 @@ hash-mismatch cause."""
 
 from __future__ import annotations
 
-from collections import Counter
-
 import pytest
 
 from tests.conftest import SF0001
-from tests.harness import _canon
+from tests.harness import _rows_to_multiset
 
 # Queries whose plans involve ordering, ranking, folds, or float aggregation —
 # the ones that could silently depend on partitioning.
@@ -447,7 +445,7 @@ RISKY = [
 def _multiset(df):
     cols = sorted(df.columns)
     idx = [df.columns.index(c) for c in cols]
-    return Counter(tuple(_canon(row[i]) for i in idx) for row in df.collect())
+    return _rows_to_multiset(df.collect(), idx)
 
 
 @pytest.mark.parametrize("key", RISKY)

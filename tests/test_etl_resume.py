@@ -15,16 +15,17 @@ exactly how the production job restarts.
 
 from __future__ import annotations
 
-import json
 import os
+import shutil
 import subprocess
 import sys
 
 import duckdb
 import pytest
 
+from tests.conftest import SF0001 as SF
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SF = "/root/testdata/sf0.001"
 SCRIPT = os.path.join(REPO, "examples", "etl_pipeline.py")
 
 
@@ -51,13 +52,17 @@ def _sink_records(out_dir: str, run_id: str) -> list[tuple]:
     return sorted(recs)
 
 
-def test_kill_mid_push_then_resume_converges(tmp_path):
-    clean_dir = str(tmp_path / "clean")
+@pytest.fixture(scope="module")
+def clean_dir(tmp_path_factory):
+    """One clean one-shot ``load001`` run, shared by the tests below."""
+    d = str(tmp_path_factory.mktemp("etl") / "clean")
+    assert _run(d, "load001", kill_after=0) == 0
+    return d
+
+
+def test_kill_mid_push_then_resume_converges(clean_dir, tmp_path):
     crash_dir = str(tmp_path / "crash")
     rid = "load001"
-
-    # clean one-shot reference run
-    assert _run(clean_dir, rid, kill_after=0) == 0
 
     # faulted run: the worker pushing partition 2 hard-crashes before the
     # partition lands -> job aborts, sink is partial; resume, SAME run_id
@@ -96,11 +101,13 @@ def test_kill_mid_push_then_resume_converges(tmp_path):
     assert sorted((r[0], r[1], r[2], r[3]) for r in oracle) == resumed
 
 
-def test_second_load_pushes_empty_diff(tmp_path):
+def test_second_load_pushes_empty_diff(clean_dir, tmp_path):
     """After a committed load, rerunning with a NEW run_id diffs against
-    the committed snapshot and pushes nothing (no source changes)."""
+    the committed snapshot and pushes nothing (no source changes). The
+    committed load is a copy of the shared clean run: its ``CURRENT``
+    pointer is relative, so the copy is a committed load of its own."""
     d = str(tmp_path / "incr")
-    assert _run(d, "load001", kill_after=0) == 0
+    shutil.copytree(clean_dir, d)
     assert _run(d, "load002", kill_after=0) == 0
     assert _sink_records(d, "load002") == []
     with open(os.path.join(d, "staging", "CURRENT")) as f:
